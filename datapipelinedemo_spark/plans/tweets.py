@@ -6,10 +6,21 @@ Reference flow (demo.py): CSV scan → ~20 row-at-a-time UDF enrichments
 
 Rebuild: one declarative enrichment (every F1–F10 as native
 expressions, NER + sentiment as broadcast joins), ``.cache()``d once,
-then four groupBy/pivot plans that share it. Each aggregation is a
-partial-agg HashAggregate; pivots get explicit chronologically-sorted
-values (no hidden distinct job); weights fold into SUMs (the reference
-materializes weight-repeated arrays, F11 — never needed).
+then four pivots that share it. The job graph of ``run_all``:
+
+1. one label job: a single ``groupBy(Year, Month)`` aggregate over the
+   enrichment yields every output's pivot values (the months holding
+   at least one phrase for the 1-D outputs, at least two for the 2-D
+   ones), sorted LEXICOGRAPHICALLY as strings (2018-1 < 2018-10 <
+   2018-2) like the golden headers. It runs first, so it also fills
+   the enrichment cache;
+2. per output, ``groupBy(keys).pivot(__label, labels).agg(value)``
+   straight off the exploded rows: Spark's two-stage pivot groups by
+   (keys, label) and then by keys — two shuffles, no separate long
+   aggregate. Weights fold into SUMs (the reference materializes
+   weight-repeated arrays, F11 — never needed);
+3. the four pivots are pinned and materialized concurrently, so their
+   single-task final stages overlap, and the enrichment is released.
 
 Output schemas match the golden CSV headers
 (Frequency_monthly_demo.csv etc.): key cols + ``<Prefix>_<Y>-<M>``
@@ -18,8 +29,13 @@ month columns (month not zero-padded) + constant ``Category1``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import weakref
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
+
 from datapipelinedemo_spark.pin import pin
 
 from datapipelinedemo_spark.functions.cleaning import (
@@ -93,41 +109,70 @@ def enrich(
     return df.cache() if cache else df
 
 
-def _month_labels(df: DataFrame, prefix: str) -> list[str]:
-    """Distinct (Year, Month) labels — the explicit pivot value list
-    (one tiny job instead of Catalyst's hidden distinct, and a
-    deterministic column order). Sorted LEXICOGRAPHICALLY by label
-    string (2018-1 < 2018-10 < 2018-2), matching the golden headers:
-    the reference's value-less pivot sorts the distinct labels as
-    strings (Frequency_monthly_demo.csv:1)."""
-    ym = {
-        (r["Year"], r["Month"])
-        for r in df.select("Year", "Month").distinct().collect()  # bounded-collect: distinct (Year,Month) pivot labels, calendar-bounded
-    }
-    return sorted(f"{prefix}_{y}-{m}" for y, m in ym)
+# enrichment frame → (1-D months, 2-D months); weak keys, so an entry
+# lives exactly as long as the enrichment it was computed from
+_LABELS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _month_labels(enriched: DataFrame) -> tuple[list[str], list[str]]:
+    """Every output's pivot values, from ONE small aggregate over the
+    enrichment: per (Year, Month), the most non-sentinel phrases any
+    tweet holds. A month has a topic row iff that max is >= 1 and a
+    topic-pair row iff it is >= 2 (NER phrases are never null), so the
+    1-D and 2-D label sets are exactly the months their exploded rows
+    cover. Returned as ``<Y>-<M>`` strings sorted lexicographically,
+    matching the golden headers: the reference's value-less pivot
+    sorts the distinct labels as strings (Frequency_monthly_demo.csv:1).
+    Memoized per enrichment frame, so the four builders share one job."""
+    months = _LABELS.get(enriched)
+    if months is None:
+        phrases = F.size(F.array_remove("All_phrases", "empty"))
+        rows = (
+            enriched.groupBy("Year", "Month")
+            .agg(F.max(phrases).alias("n"))
+            .collect()  # bounded-collect: one row per (Year, Month), calendar-bounded
+        )
+        months = tuple(
+            sorted(f"{r['Year']}-{r['Month']}" for r in rows if r["n"] >= k)
+            for k in (1, 2)
+        )
+        _LABELS[enriched] = months
+    return months
 
 
 def _pivot(
-    long: DataFrame, keys: list[str], prefix: str, value_col: str, labels: list[str]
+    rows: DataFrame, keys: list[str], prefix: str, value: Column, months: list[str]
 ) -> DataFrame:
-    wide = (
-        long.withColumn(
-            "__label",
-            F.concat(
-                F.lit(prefix + "_"),
-                F.col("Year").cast("string"),
-                F.lit("-"),
-                F.col("Month").cast("string"),
-            ),
-        )
+    label = F.concat(
+        F.lit(prefix + "_"),
+        F.col("Year").cast("string"),
+        F.lit("-"),
+        F.col("Month").cast("string"),
+    )
+    return (
+        rows.withColumn("__label", label)
         .groupBy(*keys)
-        .pivot("__label", labels)
-        .max(value_col)
+        .pivot("__label", [f"{prefix}_{ym}" for ym in months])
+        .agg(value)
         .fillna(0)
+        # the pivot's columns are already keys, then labels in list order
+        .withColumn("Category1", F.lit("Beverage"))
     )
-    return wide.withColumn("Category1", F.lit("Beverage")).select(
-        *keys, *labels, "Category1"
-    )
+
+
+def _smoothed_sentiment() -> Column:
+    """Σ(Sentiment·(Likes_log+1)) / (Σ Likes_log + 1), with the
+    numerator fixed-point snapped: order-independent and
+    oracle-reproducible (see functions.stable)."""
+    return (
+        F.sum(
+            F.floor(
+                F.col("Sentiment") * (F.col("Likes_log") + 1) * F.lit(1000000.0)
+                + F.lit(0.5)
+            ).cast("long")
+        ).cast("double")
+        / F.lit(1000000.0)
+    ) / (F.sum("Likes_log") + F.lit(1)).cast("double")
 
 
 def _explode_topics(enriched: DataFrame) -> DataFrame:
@@ -169,94 +214,89 @@ def frequency_monthly(enriched: DataFrame) -> DataFrame:
     Σ_tweets (Retweets_log + 1). Weight folded into the SUM (the
     reference repeats the phrase array weight+1 times then FreqDists
     it, demo.py:180-213)."""
-    long = _explode_topics(enriched).groupBy(
-        "Year", "Month", "Category2", "Topic"
-    ).agg(F.sum(F.col("Retweets_log") + 1).alias("val"))
-    labels = _month_labels(long, "Frequency")
-    return _pivot(long, ["Topic", "Category2"], "Frequency", "val", labels)
+    return _pivot(
+        _explode_topics(enriched),
+        ["Topic", "Category2"],
+        "Frequency",
+        F.sum(F.col("Retweets_log") + 1),
+        _month_labels(enriched)[0],
+    )
 
 
 def sentiments_monthly(enriched: DataFrame) -> DataFrame:
     """A2 — smoothed weighted mean sentiment per phrase:
     Σ(Sentiment·(Likes_log+1)) / (Σ Likes_log + 1) — numerator weights
     every tweet, denominator smooths once per group (demo.py:255-306)."""
-    long = (
-        _explode_topics(enriched)
-        .groupBy("Year", "Month", "Category2", "Topic")
-        .agg(
-            (
-                # fixed-point-snapped numerator: order-independent and
-                # oracle-reproducible (see functions.stable)
-                (
-                    F.sum(
-                        F.floor(
-                            F.col("Sentiment")
-                            * (F.col("Likes_log") + 1)
-                            * F.lit(1000000.0)
-                            + F.lit(0.5)
-                        ).cast("long")
-                    ).cast("double")
-                    / F.lit(1000000.0)
-                )
-                / (F.sum("Likes_log") + F.lit(1)).cast("double")
-            ).alias("val")
-        )
+    return _pivot(
+        _explode_topics(enriched),
+        ["Topic", "Category2"],
+        "Sentiment",
+        _smoothed_sentiment(),
+        _month_labels(enriched)[0],
     )
-    labels = _month_labels(long, "Sentiment")
-    return _pivot(long, ["Topic", "Category2"], "Sentiment", "val", labels)
 
 
 def frequency_2d_monthly(enriched: DataFrame) -> DataFrame:
     """A4 — pair frequency: per (Topic, Topic2, Category2, month),
     1 + Σ_tweets Retweets_log (asymmetric smoothing vs A1 — the
     reference's setdefault(pair, 1) fold, demo.py:436-442)."""
-    long = (
-        _explode_topic_pairs(enriched)
-        .groupBy("Year", "Month", "Category2", "Topic", "Topic2")
-        .agg((F.lit(1) + F.sum("Retweets_log")).alias("val"))
+    return _pivot(
+        _explode_topic_pairs(enriched),
+        ["Topic", "Topic2", "Category2"],
+        "Frequency",
+        F.lit(1) + F.sum("Retweets_log"),
+        _month_labels(enriched)[1],
     )
-    labels = _month_labels(long, "Frequency")
-    return _pivot(long, ["Topic", "Topic2", "Category2"], "Frequency", "val", labels)
 
 
 def sentiment2d_monthly(enriched: DataFrame) -> DataFrame:
-    """A3 — pair smoothed sentiment (golden column order:
-    Category2, Topic, Topic2, months…, Category1)."""
-    long = (
-        _explode_topic_pairs(enriched)
-        .groupBy("Year", "Month", "Category2", "Topic", "Topic2")
-        .agg(
-            (
-                # fixed-point-snapped numerator: order-independent and
-                # oracle-reproducible (see functions.stable)
-                (
-                    F.sum(
-                        F.floor(
-                            F.col("Sentiment")
-                            * (F.col("Likes_log") + 1)
-                            * F.lit(1000000.0)
-                            + F.lit(0.5)
-                        ).cast("long")
-                    ).cast("double")
-                    / F.lit(1000000.0)
-                )
-                / (F.sum("Likes_log") + F.lit(1)).cast("double")
-            ).alias("val")
-        )
+    """A3 — pair smoothed sentiment, the A2 formula per (Topic, Topic2,
+    Category2, month) (golden column order: Category2, Topic, Topic2,
+    months…, Category1)."""
+    return _pivot(
+        _explode_topic_pairs(enriched),
+        ["Category2", "Topic", "Topic2"],
+        "Sentiment",
+        _smoothed_sentiment(),
+        _month_labels(enriched)[1],
     )
-    labels = _month_labels(long, "Sentiment")
-    return _pivot(long, ["Category2", "Topic", "Topic2"], "Sentiment", "val", labels)
+
+
+def _materialize(wide: DataFrame) -> DataFrame:
+    """Pin and count one output, on a pool thread: under AQE, ``pin``
+    runs the shuffle stages as soon as it is called, so the pin itself
+    must happen here for the four outputs to overlap."""
+    # pin-bounded: pivot table, topic × category grain (dictionary-bounded) × calendar months
+    out = wide.transform(pin)
+    out.count()
+    return out
 
 
 def run_all(
     tweets: DataFrame, patterns: DataFrame, lexicon: DataFrame, **enrich_kw
 ) -> dict[str, DataFrame]:
     """All four outputs off ONE cached enrichment (the reference
-    recomputes the whole prefix per output — 4 full passes)."""
+    recomputes the whole prefix per output — 4 full passes), returned
+    materialized: writing one is a single job over its pinned blocks.
+
+    The label job and the plan building run on the calling thread (the
+    builders may be wrapped by tracing code that is not thread-safe);
+    only the materializations share a pool. The pool's threads inherit
+    the caller's job group and tags, so ``cancelJobGroup`` and per-group
+    job accounting cover them."""
     e = enrich(tweets, patterns, lexicon, **enrich_kw)
-    return {
-        "frequency_monthly": frequency_monthly(e),
-        "sentiments_monthly": sentiments_monthly(e),
-        "sentiment2d_monthly": sentiment2d_monthly(e),
-        "frequency_2d_monthly": frequency_2d_monthly(e),
-    }
+    try:
+        _month_labels(e)  # the one label job; it also fills e's cache
+        built = {
+            "frequency_monthly": frequency_monthly(e),
+            "sentiments_monthly": sentiments_monthly(e),
+            "sentiment2d_monthly": sentiment2d_monthly(e),
+            "frequency_2d_monthly": frequency_2d_monthly(e),
+        }
+        # a decorator only in pinned-thread mode (PySpark's default)
+        wrap = inheritable_thread_target(e.sparkSession)
+        target = wrap(_materialize) if callable(wrap) else _materialize
+        with ThreadPoolExecutor(len(built)) as pool:
+            return dict(zip(built, pool.map(target, built.values())))
+    finally:
+        e.unpersist()

@@ -10,6 +10,7 @@ from __future__ import annotations
 import math
 import os
 import re
+import warnings
 from datetime import datetime
 
 import pytest
@@ -176,12 +177,22 @@ def _oracle_a1():
     return agg
 
 
-def _oracle_a2():
+def _oracle_smoothed(pairs):
+    """A2 (per phrase) or A3 (per ordered phrase pair, keyed Category2,
+    Topic, Topic2): Σ sent·(likes_log+1) / (Σ likes_log + 1)."""
     num, den = {}, {}
     for row in _oracle_rows():
-        for p in row["phrases"]:
-            key = (p, row["cat"])
-            lab = f"Sentiment_{row['year']}-{row['month']}"
+        ph = row["phrases"]
+        if pairs:
+            keys = [
+                (row["cat"], ph[i], ph[j])
+                for i in range(len(ph))
+                for j in range(i + 1, len(ph))
+            ]
+        else:
+            keys = [(p, row["cat"]) for p in ph]
+        lab = f"Sentiment_{row['year']}-{row['month']}"
+        for key in keys:
             num.setdefault(key, {}).setdefault(lab, 0.0)
             den.setdefault(key, {}).setdefault(lab, 0)
             num[key][lab] += row["sent"] * (row["likes_log"] + 1)
@@ -189,6 +200,14 @@ def _oracle_a2():
     return {
         k: {lab: num[k][lab] / (den[k][lab] + 1) for lab in num[k]} for k in num
     }
+
+
+def _oracle_a2():
+    return _oracle_smoothed(pairs=False)
+
+
+def _oracle_a3():
+    return _oracle_smoothed(pairs=True)
 
 
 def _oracle_a4():
@@ -205,12 +224,17 @@ def _oracle_a4():
 
 
 # ----------------------------------------------------------------- tests --
+def _inputs(spark, rows=ROWS):
+    return (
+        spark.createDataFrame(rows, TWEET_SCHEMA),
+        pattern_table_from_rows(spark, PATTERNS),
+        lexicon_table(spark, LEXICON),
+    )
+
+
 @pytest.fixture(scope="module")
 def outputs(spark):
-    tweets = spark.createDataFrame(ROWS, TWEET_SCHEMA)
-    patterns = pattern_table_from_rows(spark, PATTERNS)
-    lexicon = lexicon_table(spark, LEXICON)
-    return TW.run_all(tweets, patterns, lexicon, cache=True)
+    return TW.run_all(*_inputs(spark), cache=True)
 
 
 def _wide_to_dict(df, keys):
@@ -230,13 +254,23 @@ def test_frequency_monthly_matches_oracle(outputs):
     assert got == exp
 
 
-def test_sentiments_monthly_matches_oracle(outputs):
-    got = _wide_to_dict(outputs["sentiments_monthly"], ["Topic", "Category2"])
-    exp = _oracle_a2()
+def _assert_smoothed_matches(got, exp):
     assert set(got) == set(exp)
     for k in exp:
         for lab, v in exp[k].items():
             assert got[k].get(lab, 0.0) == pytest.approx(v, abs=1e-6), (k, lab)
+
+
+def test_sentiments_monthly_matches_oracle(outputs):
+    got = _wide_to_dict(outputs["sentiments_monthly"], ["Topic", "Category2"])
+    _assert_smoothed_matches(got, _oracle_a2())
+
+
+def test_sentiment2d_matches_oracle(outputs):
+    got = _wide_to_dict(
+        outputs["sentiment2d_monthly"], ["Category2", "Topic", "Topic2"]
+    )
+    _assert_smoothed_matches(got, _oracle_a3())
 
 
 def test_frequency_2d_matches_oracle(outputs):
@@ -257,6 +291,100 @@ def test_schema_shape_matches_golden(outputs):
     assert s2.columns[:3] == ["Category2", "Topic", "Topic2"]
     f2 = outputs["frequency_2d_monthly"]
     assert f2.columns[:3] == ["Topic", "Topic2", "Category2"]
+
+
+# Month 2018-10 holds only single-phrase tweets: it has topic rows but
+# no topic-pair rows.
+LABEL_ROWS = [
+    ("Jan 3, 2018", "soda and sugar", "1", "1", "1", URL.format(kw="soda")),
+    ("Feb 3, 2018", "tonic with butter", "1", "3", "2", URL.format(kw="tonic")),
+    ("Oct 3, 2018", "soda good", "1", "1", "1", URL.format(kw="soda")),
+    ("Oct 9, 2018", "butter flat", "1", "1", "1", URL.format(kw="soda")),
+]
+
+
+def test_label_sets_and_order(spark):
+    """1-D headers hold every month with a phrase, 2-D headers only the
+    months with a phrase pair; both sorted as strings, not by date."""
+    outs = TW.run_all(*_inputs(spark, LABEL_ROWS))
+    one = ["2018-1", "2018-10", "2018-2"]
+    two = ["2018-1", "2018-2"]
+    expected = {
+        "frequency_monthly": (["Topic", "Category2"], "Frequency", one),
+        "sentiments_monthly": (["Topic", "Category2"], "Sentiment", one),
+        "frequency_2d_monthly": (["Topic", "Topic2", "Category2"], "Frequency", two),
+        "sentiment2d_monthly": (["Category2", "Topic", "Topic2"], "Sentiment", two),
+    }
+    for name, (keys, prefix, months) in expected.items():
+        assert outs[name].columns == [
+            *keys, *(f"{prefix}_{m}" for m in months), "Category1"
+        ], name
+    freq = _wide_to_dict(outs["frequency_monthly"], ["Topic", "Category2"])
+    assert freq[("Soda", "None")]["Frequency_2018-10"] == 3  # Retweets_log 2, +1
+
+    # the public builders still work standalone, one argument each
+    enriched = TW.enrich(*_inputs(spark, LABEL_ROWS))
+    try:
+        for name in expected:
+            alone = getattr(TW, name)(enriched)
+            assert alone.columns == outs[name].columns, name
+            assert sorted(alone.collect()) == sorted(outs[name].collect()), name
+    finally:
+        enriched.unpersist()
+
+
+def test_run_all_runs_one_label_collect(spark, monkeypatch):
+    inputs = _inputs(spark)
+    calls = []
+    collect = type(inputs[0]).collect
+
+    def counting(df):
+        calls.append(df)
+        return collect(df)
+
+    monkeypatch.setattr(type(inputs[0]), "collect", counting)
+    TW.run_all(*inputs)
+    assert len(calls) == 1
+
+
+def test_run_all_jobs_keep_caller_job_group(spark):
+    """Every job run_all launches, the pool's pivot jobs included,
+    carries the caller's job group."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    inputs = _inputs(spark)
+
+    def probe(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        return st.getJobIdsForGroup(group)
+
+    ungrouped = set(st.getJobIdsForGroup(None))
+    try:
+        first = max(probe("tweets-before"))
+        sc.setJobGroup("tweets-run-all", "tweets-run-all")
+        with warnings.catch_warnings():
+            warnings.filterwarnings("error", message=".*Tags will not be inherited")
+            TW.run_all(*inputs)
+        last = min(probe("tweets-after"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert set(st.getJobIdsForGroup(None)) == ungrouped
+    grouped = set(st.getJobIdsForGroup("tweets-run-all"))
+    # job ids are sequential: everything between the probes is run_all's
+    assert grouped == set(range(first + 1, last))
+    # the label job plus at least one job per pivot output
+    assert len(grouped) >= 5
+
+
+def test_run_all_releases_enrichment_cache(spark, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_PIN", raising=False)  # default local pins
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    inputs = _inputs(spark)
+    before = cache.cachedData().size()
+    for _ in range(2):
+        TW.run_all(*inputs)
+    assert cache.cachedData().size() == before
 
 
 GOLDEN_DIR = "/root/reference"
