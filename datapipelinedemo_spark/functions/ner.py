@@ -20,9 +20,9 @@ Native rebuild (the scale path, SURVEY.md §2.3 F8b):
 5. set-dedup surviving ids, ``["empty"]`` when nothing matched.
 
 Everything is DataFrame ops: one broadcast hash join (pattern table is
-a few MB — far under the broadcast threshold) + one groupBy over the
-matches. No Python touches row data. A spaCy fidelity path is gated
-behind ``HAVE_SPACY`` for environments that have the model installed.
+a few MB — far under the broadcast threshold), one groupBy over the
+matches and one join that reattaches them to the input rows. No Python
+touches row data.
 """
 
 from __future__ import annotations
@@ -52,13 +52,6 @@ TOKEN_RE = r"[a-z0-9_']+|[^a-z0-9_'\s]"
 # demo.py:28-29); lower() of these tokens equals TOKEN_RE over
 # lower(text) for ASCII input.
 TOKEN_RE_CASED = r"[A-Za-z0-9_']+|[^A-Za-z0-9_'\s]"
-
-try:  # fidelity path — not installed in this container
-    import spacy  # noqa: F401
-
-    HAVE_SPACY = True
-except Exception:
-    HAVE_SPACY = False
 
 PATTERN_SCHEMA = T.StructType(
     [
@@ -129,9 +122,11 @@ def extract_phrases(
     Matching is first-token-indexed: only positions whose token equals
     some pattern's first token become candidates (for a brand/entity
     dictionary over natural text that is a tiny fraction of positions),
-    and the full span is verified just for those. The naive
-    all-(position × pattern-length) n-gram generation materializes
-    ~max_len strings per token — 16× more work with this dictionary.
+    and the full span is verified just for those, against the token
+    array each exploded row carries. The naive all-(position ×
+    pattern-length) n-gram generation materializes ~max_len strings per
+    token — 16× more work with this dictionary. Two joins in all: the
+    broadcast first-token join and the left join back onto ``df``.
     """
     # original-casing tokens: matching compares lowercased, but id-less
     # patterns emit the SURFACE form like the reference's ent.text
@@ -146,31 +141,18 @@ def extract_phrases(
     pats = patterns.withColumn(
         "__ftok", F.split_part(F.col("pattern"), F.lit(" "), F.lit(1))
     )
-    # slim explode (no token array carried), broadcast first-token join
     ex = toks.select(
-        "__rid", F.posexplode("__toks").alias("start", "__tok")
+        "__rid", "__toks", F.posexplode("__toks").alias("start", "__tok")
     )
-    cand = ex.join(
-        F.broadcast(pats), F.lower(ex["__tok"]) == pats["__ftok"]
-    ).select("__rid", "start", "pattern", "n_tokens", "ent_id")
-    # verify the full span: rejoin the token array (equi-join on the row
-    # id — co-partitioned, no fan-out beyond real candidates)
+    span = F.expr("array_join(slice(__toks, start + 1, n_tokens), ' ')")
     matched = (
-        cand.join(toks, "__rid")
-        .filter(
-            F.lower(
-                F.expr("array_join(slice(__toks, start + 1, n_tokens), ' ')")
-            )
-            == F.col("pattern")
-        )
+        ex.join(F.broadcast(pats), F.lower(ex["__tok"]) == pats["__ftok"])
+        .filter(F.lower(span) == F.col("pattern"))
         .select(
             "__rid",
             "start",
             F.col("n_tokens").alias("len"),
-            F.coalesce(
-                F.col("ent_id"),
-                F.expr("array_join(slice(__toks, start + 1, n_tokens), ' ')"),
-            ).alias("phrase"),
+            F.coalesce(F.col("ent_id"), span).alias("phrase"),
         )
     )
     # per row: spaCy filter_spans — sort by (len desc, start asc), keep a

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datapipelinedemo_spark.functions.stable import _scaled
+
 try:  # fidelity path — not installed in this container
     from textblob import TextBlob  # noqa: F401
 
@@ -81,13 +83,12 @@ def score_sentiment(
             F.split(F.lower(F.col(text_col)), r"[^a-z0-9']+")
         ).alias("__tok"),
     ).filter(F.col("__tok") != "")
-    snapped = F.floor(F.col("polarity") * 1000000.0 + 0.5).cast("long")
     scored = (
         toks.join(F.broadcast(lexicon), toks["__tok"] == lexicon["token"])
         .groupBy("__rid")
         .agg(
             (
-                (F.sum(snapped).cast("double") / F.lit(1000000.0))
+                (F.sum(_scaled("polarity", 6)).cast("double") / F.lit(1000000.0))
                 / F.count(F.lit(1)).cast("double")
             ).alias("__sent")
         )

@@ -59,6 +59,22 @@ def dec_avg(c, alias: str, scale: int = 4) -> Column:
     ).alias(alias)
 
 
+def smoothed_mean(value, weight) -> Column:
+    """The reference's smoothed weighted mean (A2/A3, demo.py:255-306):
+    Σ value·(weight+1) / (Σ weight + 1) — every row weighted in the
+    numerator, the +1 smoothing added once per group in the
+    denominator. The numerator is a 1e-6 fixed-point sum, so the value
+    is order- and engine-independent.
+
+    DuckDB oracle twin: ``(CAST(SUM(CAST(FLOOR(v * (w + 1) * 1000000.0
+    + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / CAST(SUM(w) + 1 AS
+    DOUBLE)``.
+    """
+    value, weight = _col(value), _col(weight)
+    num = F.sum(_scaled(value * (weight + 1), 6)).cast("double") / F.lit(1e6)
+    return num / (F.sum(weight) + F.lit(1)).cast("double")
+
+
 def md5_long(c, chars: int = 15) -> Column:
     """Deterministic 60-bit integer hash both engines can compute:
     first ``chars`` hex digits of md5, parsed base-16. 15 hex digits

@@ -19,7 +19,7 @@ from datapipelinedemo_spark.functions.cleaning import (
     month_label,
     parse_human_number,
 )
-from datapipelinedemo_spark.functions.stable import dec_sum
+from datapipelinedemo_spark.functions.stable import dec_sum, smoothed_mean
 from datapipelinedemo_spark.plans.catalog import register
 from datapipelinedemo_spark.tables import table
 
@@ -154,17 +154,8 @@ def a2_smoothed_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         w.alias("w"),
     )
-    num = (
-        F.sum(
-            F.floor(
-                (F.col("value") * (F.col("w") + 1)) * F.lit(1000000.0) + F.lit(0.5)
-            ).cast("long")
-        ).cast("double")
-        / F.lit(1000000.0)
-    )
-    den = (F.sum("w") + F.lit(1)).cast("double")
     return s.groupBy("event_type", "month").agg(
-        (num / den).alias("smoothed_sentiment"),
+        smoothed_mean("value", "w").alias("smoothed_sentiment"),
         F.count(F.lit(1)).alias("n"),
     )
 
@@ -258,15 +249,6 @@ def a3_pair_smoothed_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = explode_pairs(
         docs, "toks", out1="w1", out2="w2", keep=["lang", "sent", "w"]
     )
-    num = (
-        F.sum(
-            F.floor(
-                (F.col("sent") * (F.col("w") + 1)) * F.lit(1000000.0) + F.lit(0.5)
-            ).cast("long")
-        ).cast("double")
-        / F.lit(1000000.0)
-    )
-    den = (F.sum("w") + F.lit(1)).cast("double")
     return pairs.groupBy("lang", "w1", "w2").agg(
-        (num / den).alias("pair_sentiment")
+        smoothed_mean("sent", "w").alias("pair_sentiment")
     )

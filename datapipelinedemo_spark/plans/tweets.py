@@ -40,60 +40,61 @@ from datapipelinedemo_spark.pin import pin
 
 from datapipelinedemo_spark.functions.cleaning import (
     clean_timestamp,
+    date_parts,
     keyword_from_url,
     keyword_to_category,
     log2_bucket,
+    month_label,
     parse_human_number,
     parse_timestamp_date,
 )
 from datapipelinedemo_spark.functions.ner import extract_phrases
 from datapipelinedemo_spark.functions.sentiment import score_sentiment
+from datapipelinedemo_spark.functions.stable import smoothed_mean
 
 
-def enrich(
-    tweets: DataFrame,
-    patterns: DataFrame,
-    lexicon: DataFrame,
-    sample_n: int | None = None,
-    seed: int = 42,
-    cache: bool = True,
-) -> DataFrame:
-    """E1 — the shared enrichment prefix (demo.py:50-187), one pass.
+def enrich(tweets: DataFrame, patterns: DataFrame, lexicon: DataFrame) -> DataFrame:
+    """E1 — the shared enrichment prefix (demo.py:50-187), one pass,
+    returned cached.
 
-    ``sample_n`` reproduces the reference's P1 random-sample-then-limit
-    (demo.py:55,59) but SEEDED; pass None to process everything (the
-    reference's unseeded global sort made its golden outputs
-    unreproducible — quarantined here, SURVEY.md §5).
+    The row-level part is two projections around one filter: parse the
+    date, the three counts (null → 0) and the URL keyword; keep the rows
+    with a date and a keyword (a null Timestamp or Page_URL yields
+    neither); then add the log buckets, Year/Month/Quarter, Category2
+    and the ``__rid`` row id. NER and sentiment then attach by
+    ``__rid``. The reference's P1 random sample (demo.py:55,59) is not
+    applied: its unseeded global sort made the golden outputs
+    unreproducible (SURVEY.md §5).
     """
-    df = tweets.filter(F.col("Timestamp").isNotNull())
-    if sample_n is not None:
-        df = df.orderBy(F.rand(seed)).limit(sample_n)
-
     df = (
-        df.withColumn("TweetDate", parse_timestamp_date(clean_timestamp("Timestamp")))
-        .filter(F.col("TweetDate").isNotNull())
-        .fillna("0", subset=["Comments", "Likes", "Retweets"])
-        .withColumn("Comments", parse_human_number("Comments"))
-        .withColumn("Likes", parse_human_number("Likes"))
-        .withColumn("Retweets", parse_human_number("Retweets"))
-        .withColumn("Likes_log", log2_bucket("Likes"))
-        .withColumn("Retweets_log", log2_bucket("Retweets"))
-        .withColumn("Year", F.year("TweetDate"))
-        .withColumn("Month", F.month("TweetDate"))
-        .withColumn("Quarter", F.quarter("TweetDate"))
-        .filter(F.col("Page_URL").isNotNull())
-        .withColumn("Keyword", keyword_from_url("Page_URL"))
-        .filter(F.col("Keyword").isNotNull())
-        # Unknown keyword → null category in the reference (demo.py:135);
-        # those rows are KEPT and every output consumes Category2 only via
-        # str(key) in the month/category UDFs (demo.py:219, str(None) →
-        # 'None'), so coalescing to the literal 'None' here is
-        # observationally equivalent and keeps the group key non-null.
-        .withColumn(
-            "Category2",
-            F.coalesce(keyword_to_category("Keyword"), F.lit("None")),
+        tweets.withColumns(
+            {
+                "TweetDate": parse_timestamp_date(clean_timestamp("Timestamp")),
+                "Comments": parse_human_number("Comments"),
+                "Likes": parse_human_number("Likes"),
+                "Retweets": parse_human_number("Retweets"),
+                "Keyword": keyword_from_url("Page_URL"),
+            }
         )
-        .withColumn("__rid", F.monotonically_increasing_id())
+        .filter(F.col("TweetDate").isNotNull() & F.col("Keyword").isNotNull())
+        .withColumns(
+            {
+                "Likes_log": log2_bucket("Likes"),
+                "Retweets_log": log2_bucket("Retweets"),
+                **date_parts("TweetDate"),
+                # Unknown keyword → null category in the reference
+                # (demo.py:135); those rows are KEPT and every output
+                # consumes Category2 only via str(key) in the
+                # month/category UDFs (demo.py:219, str(None) → 'None'),
+                # so coalescing to the literal 'None' here is
+                # observationally equivalent and keeps the group key
+                # non-null.
+                "Category2": F.coalesce(
+                    keyword_to_category("Keyword"), F.lit("None")
+                ),
+                "__rid": F.monotonically_increasing_id(),
+            }
+        )
     )
     # __rid feeds TWO reattach joins (phrases, sentiment) below.
     # monotonically_increasing_id is only stable for a fixed partition
@@ -105,8 +106,7 @@ def enrich(
     # CheckEmpty != 1 (demo.py:157's intended semantics): drop sentinel rows
     df = df.filter(F.col("All_phrases") != F.array(F.lit("empty")))
     df = score_sentiment(df, "Text", lexicon, "__rid", out_col="Sentiment")
-    df = df.drop("__rid")
-    return df.cache() if cache else df
+    return df.drop("__rid").cache()
 
 
 # enrichment frame → (1-D months, 2-D months); weak keys, so an entry
@@ -143,14 +143,8 @@ def _month_labels(enriched: DataFrame) -> tuple[list[str], list[str]]:
 def _pivot(
     rows: DataFrame, keys: list[str], prefix: str, value: Column, months: list[str]
 ) -> DataFrame:
-    label = F.concat(
-        F.lit(prefix + "_"),
-        F.col("Year").cast("string"),
-        F.lit("-"),
-        F.col("Month").cast("string"),
-    )
     return (
-        rows.withColumn("__label", label)
+        rows.withColumn("__label", month_label(prefix, "Year", "Month"))
         .groupBy(*keys)
         .pivot("__label", [f"{prefix}_{ym}" for ym in months])
         .agg(value)
@@ -158,21 +152,6 @@ def _pivot(
         # the pivot's columns are already keys, then labels in list order
         .withColumn("Category1", F.lit("Beverage"))
     )
-
-
-def _smoothed_sentiment() -> Column:
-    """Σ(Sentiment·(Likes_log+1)) / (Σ Likes_log + 1), with the
-    numerator fixed-point snapped: order-independent and
-    oracle-reproducible (see functions.stable)."""
-    return (
-        F.sum(
-            F.floor(
-                F.col("Sentiment") * (F.col("Likes_log") + 1) * F.lit(1000000.0)
-                + F.lit(0.5)
-            ).cast("long")
-        ).cast("double")
-        / F.lit(1000000.0)
-    ) / (F.sum("Likes_log") + F.lit(1)).cast("double")
 
 
 def _explode_topics(enriched: DataFrame) -> DataFrame:
@@ -231,7 +210,7 @@ def sentiments_monthly(enriched: DataFrame) -> DataFrame:
         _explode_topics(enriched),
         ["Topic", "Category2"],
         "Sentiment",
-        _smoothed_sentiment(),
+        smoothed_mean("Sentiment", "Likes_log"),
         _month_labels(enriched)[0],
     )
 
@@ -257,7 +236,7 @@ def sentiment2d_monthly(enriched: DataFrame) -> DataFrame:
         _explode_topic_pairs(enriched),
         ["Category2", "Topic", "Topic2"],
         "Sentiment",
-        _smoothed_sentiment(),
+        smoothed_mean("Sentiment", "Likes_log"),
         _month_labels(enriched)[1],
     )
 
@@ -273,7 +252,7 @@ def _materialize(wide: DataFrame) -> DataFrame:
 
 
 def run_all(
-    tweets: DataFrame, patterns: DataFrame, lexicon: DataFrame, **enrich_kw
+    tweets: DataFrame, patterns: DataFrame, lexicon: DataFrame
 ) -> dict[str, DataFrame]:
     """All four outputs off ONE cached enrichment (the reference
     recomputes the whole prefix per output — 4 full passes), returned
@@ -284,7 +263,7 @@ def run_all(
     only the materializations share a pool. The pool's threads inherit
     the caller's job group and tags, so ``cancelJobGroup`` and per-group
     job accounting cover them."""
-    e = enrich(tweets, patterns, lexicon, **enrich_kw)
+    e = enrich(tweets, patterns, lexicon)
     try:
         _month_labels(e)  # the one label job; it also fills e's cache
         built = {

@@ -82,7 +82,6 @@ def _enriched(spark: SparkSession) -> DataFrame:
             tweets,
             pattern_table_from_rows(spark, PATTERNS),
             lexicon_table(spark, LEXICON),
-            cache=True,
         )
 
     return _ENRICHED_MEMO.get_or_build(

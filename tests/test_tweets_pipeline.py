@@ -7,9 +7,11 @@ the four aggregation folds (A1 vs A4 smoothing asymmetry included).
 
 from __future__ import annotations
 
+import importlib.util
 import math
 import os
 import re
+import sys
 import warnings
 from datetime import datetime
 
@@ -53,6 +55,7 @@ ROWS = [
     ("Apr 2, 2019", "soda good", "1", "1", "1", URL.format(kw="coffee")),  # unknown kw→Category2 'None', KEPT
     ("May 3, 2019", "love coke and soda", "2", "12", "5", URL.format(kw="coke")),  # coke→ginger ale
     ("May 4, 2019", "pop with butter flat", "0", "3", "2", URL.format(kw="pop")),  # pop→ginger ale
+    ("May 9, 2019", "sugar soda love", "1", None, None, URL.format(kw="soda")),  # null counts→0
 ]
 
 
@@ -234,7 +237,7 @@ def _inputs(spark, rows=ROWS):
 
 @pytest.fixture(scope="module")
 def outputs(spark):
-    return TW.run_all(*_inputs(spark), cache=True)
+    return TW.run_all(*_inputs(spark))
 
 
 def _wide_to_dict(df, keys):
@@ -387,6 +390,34 @@ def test_run_all_releases_enrichment_cache(spark, monkeypatch):
     assert cache.cachedData().size() == before
 
 
+def test_run_all_records_every_traced_span(spark, monkeypatch):
+    """The traced benchmark's wrappers (tweetbench/spans.py) still hook
+    every layer run_all goes through."""
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tweetbench", "spans.py",
+    )
+    spec = importlib.util.spec_from_file_location("tweetbench_spans", path)
+    spans = importlib.util.module_from_spec(spec)
+    monkeypatch.setitem(sys.modules, spec.name, spans)  # for its dataclass
+    spec.loader.exec_module(spans)
+
+    rec, held = spans.SpanRecorder(), []
+    try:
+        with spans.instrument(rec, held):
+            outs = TW.run_all(*_inputs(spark))
+    finally:
+        for df in held:
+            df.unpersist()
+    names = {s.name for s in rec.spans}
+    assert names == {
+        "enrich", "ner", "sentiment", "pairs",
+        *(f"tweets.{name}" for name in outs),
+    }
+    counts = {name for _, name in rec.counts}
+    assert {"enrich.rows_out", "ner.phrases_out", "pairs.rows_out"} <= counts
+
+
 GOLDEN_DIR = "/root/reference"
 GOLDEN = {
     "frequency_monthly": ("Frequency_monthly_demo.csv",
@@ -431,6 +462,20 @@ def test_header_fidelity_vs_golden_csvs(outputs):
         omonths = ours[len(keys):-1]
         assert all(pat.match(c) for c in omonths), (name, omonths[:3])
         assert omonths == sorted(omonths), name
+
+
+def test_extract_phrases_plan_has_two_joins(spark):
+    """The span check reads the token array its exploded row carries:
+    the only joins are the broadcast first-token join and the reattach
+    onto the input rows."""
+    from datapipelinedemo_spark.functions.ner import extract_phrases
+
+    df = spark.createDataFrame([(1, "ginger ale")], "id long, text string")
+    out = extract_phrases(
+        df, "text", pattern_table_from_rows(spark, PATTERNS), "id"
+    )
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bJoin \w+", plan)) == 2, plan
 
 
 def test_ner_semantics(spark):
